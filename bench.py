@@ -52,7 +52,7 @@ Workloads:
   * headline catalog queries at $SPARK_GRAFT_SF_DIR (default sf0.1),
     materialized via the noop sink (all columns computed, nothing kept);
   * crawl round, staged as production runs it — UNTIMED setup (the
-    durable seen-set + Bloom artifacts a round inherits), then timed
+    durable seen-set + cuckoo filter a round inherits), then timed
     insert (canonicalize + dedup), pop (politeness round over a
     POP_MULT× larger stored frontier), extract (wide-matrix XBRL
     kernel);
@@ -195,7 +195,7 @@ def _crawl_subprocess(
     timeout: float,
 ) -> dict:
     """Measure the crawl stages in a FRESH JVM at `cores`: warm-up pass,
-    untimed setup (seen set + bloom — durable artifacts in production),
+    untimed setup (seen set + cuckoo filter — durable artifacts in production),
     then one timed pass per stage (in-process session reuse and leaked
     caches poison repeated measurements — measured 10× swings; a clean
     subprocess per point is the only stable protocol on this box).

@@ -6,7 +6,7 @@ DART disclosure crawler, surveyed in SURVEY.md) as idiomatic Spark
 dataflow:
 
 * an Iceberg/parquet-snapshot **URL frontier** with URL-seen dedup via a
-  partitioned Bloom filter keyed by ``xxhash64(url_canon)``,
+  partitioned cuckoo filter keyed by ``xxhash64(url_canon)``,
 * a **politeness scheduler** (per-host budgets, robots rules) expressed
   as a window top-k + salted repartition,
 * a vectorized **extract kernel** (zipped XBRL-style payload → long fact

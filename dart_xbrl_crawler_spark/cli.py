@@ -12,7 +12,7 @@ Subcommands (each one pure DataFrame job over the frontier store):
   bootstrap --seeds <parquet> --store <dir>
       seed list → initial queued frontier (canonicalize, dedup, commit)
   expand --urls <parquet> --store <dir>
-      insert newly-discovered urls (bloom + exact dedup)
+      insert newly-discovered urls (cuckoo filter + exact dedup)
   fetch --pages <parquet> --robots <parquet> --store <dir> [--round-ms N]
       one politeness-bounded crawl round; prints lineage counts
   crawl --pages <parquet> --robots <parquet> --store <dir> [--max-rounds N]
@@ -27,8 +27,8 @@ Subcommands (each one pure DataFrame job over the frontier store):
       re-queue rows fetched before the cutoff, or exactly the urls a
       sitemap/feed advertises as changed (freshness loop)
   expire --store <dir> --before <ts>
-      tombstone old terminal rows; on a cuckoo-backed store their
-      hashes also leave the seen filter (urls can resurrect)
+      tombstone old terminal rows; their hashes also leave the seen
+      filter (urls can resurrect)
   status --store <dir>
       frontier state counts from the latest snapshot
   curate --pages <parquet> --out <dir> [--min-words N] [--redact-pii]
@@ -72,9 +72,6 @@ def main(argv: list[str] | None = None) -> int:
                    help="limit seeds to run_ts - N*30 days .. run_ts")
     b.add_argument("--bgn-de", default=None, help="explicit YYYYMMDD window start (with --end-de)")
     b.add_argument("--end-de", default=None, help="explicit YYYYMMDD window end (with --bgn-de)")
-    b.add_argument("--seen-filter", choices=("bloom", "cuckoo"), default=None,
-                   help="URL-seen structure for a NEW store (persisted; "
-                        "cuckoo adds deletion → expire/resurrect)")
 
     e = sub.add_parser("expand")
     e.add_argument("--urls", required=True)
@@ -166,7 +163,7 @@ def main(argv: list[str] | None = None) -> int:
 
         from .operators.scheduler import date_window
 
-        store = FrontierStore(args.store, seen_filter=args.seen_filter)
+        store = FrontierStore(args.store)
         seeds = spark.read.parquet(args.seeds)
         if "url" in seeds.columns:
             # plain web seeds (url [, priority]) — bootstrap directly;

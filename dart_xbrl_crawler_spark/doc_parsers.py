@@ -41,20 +41,20 @@ import zlib
 # Fast in-memory ZIP reader for the common archive shape (measured ~2×
 # the whole parse_document on mini-XBRL pages: zipfile's ZipFile/
 # ZipExtFile machinery costs ~100 µs per tiny archive).  STRICT: the
-# central directory is validated up front — any comment, zip64 marker,
-# multi-disk field, encryption flag, unsupported method or malformed
-# local header returns None and the stdlib path runs instead, so the
-# accepted-document set (and the failure semantics: corrupt data →
-# exception → (None, None)) is identical.  CRC is verified like
-# zipfile._update_crc does.
+# whole archive is validated and inflated up front — any comment, zip64
+# marker, multi-disk field, encryption flag, unsupported method,
+# malformed local header, local/central name mismatch, inflate error,
+# length ≠ usize or CRC mismatch returns None and the stdlib path runs
+# instead, so zipfile alone decides every irregular archive and the
+# accepted-document set is identical.
 # ---------------------------------------------------------------------
 _EOCD = struct.Struct("<4H2LH")
 _CDENT = struct.Struct("<6H3L5H2L")
 
 
 def _zip_entries_fast(data: bytes):
-    """[(name, (method, crc, csize, data_start))] in central-directory
-    order, or None when the archive needs the stdlib parser."""
+    """[(name, member bytes)] in central-directory order, or None when
+    the archive needs the stdlib parser."""
     if len(data) < 22 or data[-22:-18] != b"PK\x05\x06":
         return None  # archive comment / truncated → stdlib
     disk, cd_disk, n_disk, n_total, cd_size, cd_off, clen = _EOCD.unpack(
@@ -110,24 +110,21 @@ def _zip_entries_fast(data: bytes):
         if data[loff : loff + 4] != b"PK\x03\x04":
             return None
         lnlen, lelen = struct.unpack("<2H", data[loff + 26 : loff + 30])
+        if data[loff + 30 : loff + 30 + lnlen] != raw_name:
+            return None  # zipfile rejects a local/central name mismatch
         start = loff + 30 + lnlen + lelen
         if start + csize > len(data):
             return None
-        entries.append((name, (method, crc, csize, start)))
+        raw = data[start : start + csize]
+        try:
+            out = raw if method == 0 else zlib.decompress(raw, -15)
+        except zlib.error:
+            return None
+        if len(out) != usize or zlib.crc32(out) & 0xFFFFFFFF != crc:
+            return None
+        entries.append((name, out))
         pos += 46 + nlen + elen + comlen
     return entries
-
-
-def _zip_read_member(data: bytes, meta) -> bytes:
-    """Decompress + CRC-verify one member; raises (like zipfile's
-    BadZipFile path) on corrupt data — parse_document's except turns
-    that into (None, None) exactly as before."""
-    method, crc, csize, start = meta
-    raw = data[start : start + csize]
-    out = raw if method == 0 else zlib.decompress(raw, -15)
-    if zlib.crc32(out) & 0xFFFFFFFF != crc:
-        raise ValueError("Bad CRC-32 for zip member")
-    return out
 
 _ENTITY_RE = re.compile(r"entity(\d{8})")
 
@@ -322,9 +319,8 @@ def parse_document(html: bytes) -> tuple[str | None, dict | None]:
         else:
             # duplicate names: read() resolves to the LAST entry, the
             # stdlib NameToInfo behavior
-            by_name = dict(fast)
             namelist = [n for n, _ in fast]
-            read = lambda n: _zip_read_member(html, by_name[n])  # noqa: E731
+            read = dict(fast).__getitem__
         names = sorted(n for n in namelist if n.endswith(".xbrl"))
         if not names:
             return None, None

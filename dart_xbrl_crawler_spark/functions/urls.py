@@ -148,11 +148,12 @@ def _pair_key(kv: str) -> tuple[str, str]:
 def _canonicalize_udf(urls: pd.Series) -> pd.DataFrame:
     # single pass, two flat lists — not .map chains (each is another
     # full-batch python loop + temporary)
-    canons: list[str] = []
-    hosts: list[str] = []
+    # a NULL url stays a row with NULL url_canon/host
+    canons: list[str | None] = []
+    hosts: list[str | None] = []
     canon = canonicalize_one
     for u in urls:
-        c, h = canon(u)
+        c, h = (None, None) if u is None else canon(u)
         canons.append(c)
         hosts.append(h)
     return pd.DataFrame({"url_canon": canons, "host": hosts})
@@ -192,7 +193,8 @@ _FAST_URL_RE = (
     r"(/[^#?%\s]*"  # path: no %-escapes, one '?' max, no whitespace
     r"(\?([A-Za-z0-9_.~\-]*(=[A-Za-z0-9_.~\-]*)?"  # _SAFE_QUERY and
     r"(&[A-Za-z0-9_.~\-]*(=[A-Za-z0-9_.~\-]*)?)*)?)?)?"  # ≤1 '=' per kv
-    r"(#\S*)?$"  # fragment (dropped) — never contains whitespace
+    r"(#\S*)?\z"  # fragment (dropped) — never contains whitespace;
+    # \z, not $: Java's $ also matches before a final line terminator
 )
 
 
@@ -264,7 +266,9 @@ def with_url_canon_split(df: DataFrame, url_col: str = "url") -> DataFrame:
         .withColumn("host", host)
         .withColumn("url_hash", F.xxhash64("url_canon"))
     )
-    slow = with_url_canon(df.filter(~eligible), url_col)
+    # rlike(NULL) is NULL, which neither filter keeps: NULL urls go to
+    # the UDF branch explicitly
+    slow = with_url_canon(df.filter(F.coalesce(~eligible, F.lit(True))), url_col)
     return fast.unionByName(slow)
 
 

@@ -28,13 +28,16 @@ from . import politeness as P
 
 
 class FrontierStore:
-    """``expected_keys`` fixes the Bloom bitmap sizing for the table's
-    lifetime so per-insert filters OR-merge with the stored one (same
-    m_bits per shard) — the filter is a durable artifact built
+    """``expected_keys`` fixes the cuckoo filter's per-shard bucket
+    count for the table's lifetime, so each insert folds its batch into
+    the stored tables — the filter is a durable artifact built
     incrementally from each batch, never rebuilt from the full frontier
     (at 10^10 rows a rebuild is a full scan per insert).  Exactness
-    never depends on it: an overgrown filter only raises fpp, and every
-    flagged hash is exactly confirmed in the shard cogroup."""
+    never depends on it: every flagged hash is exactly confirmed in the
+    shard cogroup.  A shard filled past its capacity raises instead of
+    degrading silently — size ``expected_keys`` for the store's
+    lifetime.  The ``_bloom`` path suffix and ``n_bloom_shards`` keep
+    their names so existing stores and callers open unchanged."""
 
     def __init__(
         self,
@@ -46,7 +49,6 @@ class FrontierStore:
         storage: str = "parquet",
         n_buckets: int = 64,
         metrics_compact_every: int = 64,
-        seen_filter: str | None = None,
         filter_keep_last: int = 4,
     ):
         if storage == "bucketed":
@@ -75,25 +77,18 @@ class FrontierStore:
         self.table_path = path
         self.host_metrics = SnapshotTable(path + "_host_metrics")
         self.metrics = SnapshotTable(path + "_metrics")
-        self.bloom = SnapshotTable(path + "_bloom")
+        # zstd: a sized-for-lifetime cuckoo image is mostly empty slots
+        # plus random 16-bit tags, which snappy barely shrinks
+        self.bloom = SnapshotTable(path + "_bloom", compression="zstd")
         self.n_bloom_shards = n_bloom_shards
         self.expected_keys = expected_keys
         # metrics chains grow one snapshot per round/insert; past this
         # many they fold into running sums (read_all stays O(1) files)
         self.metrics_compact_every = metrics_compact_every
-        # 'bloom' (OR-merge incremental) or 'cuckoo' (insert/delete
-        # incremental — supports retiring keys on expiry, which a Bloom
-        # structurally cannot); both probe through the same dedup plan.
-        # The choice is a STORE property, not a session one: it persists
-        # in a config sidecar so a later process (e.g. the CLI's expire)
-        # reopens the store with the right filter semantics; an explicit
-        # conflicting argument is an error, not a silent mix.
-        self.seen_filter = self._resolve_seen_filter(path, seen_filter)
-        # every filter commit is a FULL filter image (at the 10^10-url
-        # design point ≈ 12 GB for the bloom) — an unbounded chain is a
-        # real disk leak over a long crawl.  Keep the last few (enough
-        # to pair with MergeTable rollbacks of recent snapshots); the
-        # latest is the only one reads ever touch.
+        # every filter commit is a FULL filter image — an unbounded
+        # chain is a real disk leak over a long crawl.  Keep the last
+        # few (enough to pair with MergeTable rollbacks of recent
+        # snapshots); the latest is the only one reads ever touch.
         self.filter_keep_last = filter_keep_last
         # previous round's fetch cache: must outlive run_round's return
         # (fetched_pages derives from it) but not the NEXT round —
@@ -103,93 +98,49 @@ class FrontierStore:
         # once per process by an exact scan, then applied as an offset
         self._queued_correction: int | None = None
 
-    @staticmethod
-    def _resolve_seen_filter(path: str, requested: str | None) -> str:
-        import json
-        import os
-
-        if requested is not None and requested not in ("bloom", "cuckoo"):
-            raise ValueError(f"unknown seen_filter {requested!r}")
-        cfg_path = path + "_config.json"
-        stored = None
-        if os.path.exists(cfg_path):
-            with open(cfg_path) as f:
-                stored = json.load(f).get("seen_filter")
-        if stored is not None:
-            if requested is not None and requested != stored:
-                raise ValueError(
-                    f"store at {path} was created with seen_filter="
-                    f"{stored!r}; cannot reopen as {requested!r}"
-                )
-            return stored
-        # no stored config: resolve but do NOT stamp here — a read-only
-        # open (status/a pre-bootstrap probe) must not pin the filter
-        # kind.  The stamp happens at the first WRITE (_stamp_config
-        # from bootstrap/insert), so every created store is pinned and
-        # a later conflicting explicit reopen still errors.
-        return requested or "bloom"
-
-    def _stamp_config(self) -> None:
-        """Persist the resolved filter kind at store-creation time (the
-        first write path) if not already pinned."""
-        import json
-        import os
-
-        cfg_path = self.table_path + "_config.json"
-        if os.path.exists(cfg_path):
-            return
-        os.makedirs(os.path.dirname(cfg_path) or ".", exist_ok=True)
-        tmp = cfg_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"seen_filter": self.seen_filter}, f)
-        os.replace(tmp, cfg_path)
-
     def _commit_bloom_batch(
-        self, spark: SparkSession, hashes: DataFrame, note: str
+        self, spark: SparkSession, hashes: DataFrame, note: str,
+        rebuild: bool = False,
     ) -> None:
-        """Fold a batch of url_hashes into the stored seen filter —
-        bloom: partial build + OR-merge; cuckoo: shard-aligned
-        incremental insert into the stored tables."""
-        self._stamp_config()  # first write pins the filter kind
-        if self.seen_filter == "cuckoo":
-            if self.bloom.snapshots():
-                merged = D.cuckoo_insert(
-                    self.bloom.read(spark),
-                    hashes,
-                    n_shards=self.n_bloom_shards,
-                    expected_per_shard=self.expected_keys // self.n_bloom_shards + 1,
-                )
-            else:
-                merged = D.build_cuckoo_filter(
-                    hashes,
-                    n_shards=self.n_bloom_shards,
-                    expected_keys=self.expected_keys,
-                )
-            self.bloom.commit(merged, note=note)
-            self.bloom.expire(self.filter_keep_last)
-            return
-        batch = D.build_seen_filter(
-            hashes,
-            n_shards=self.n_bloom_shards,
-            expected_keys=self.expected_keys,
-        )
-        if self.bloom.snapshots():
-            merged = D.merge_seen_filters(self.bloom.read(spark), batch)
+        """Fold a batch of url_hashes into the stored cuckoo filter
+        (shard-aligned incremental insert).  With no stored filter, or
+        ``rebuild``, the batch alone becomes a fresh filter image."""
+        if rebuild or not self.bloom.snapshots():
+            merged = D.build_cuckoo_filter(
+                hashes, n_shards=self.n_bloom_shards,
+                expected_keys=self.expected_keys,
+            )
         else:
-            merged = batch
+            merged = D.cuckoo_insert(
+                self.bloom.read(spark),
+                hashes,
+                n_shards=self.n_bloom_shards,
+                expected_per_shard=self.expected_keys // self.n_bloom_shards + 1,
+            )
         self.bloom.commit(merged, note=note)
         self.bloom.expire(self.filter_keep_last)
 
+    def _read_cuckoo(self, spark: SparkSession) -> DataFrame:
+        """The stored cuckoo filter.  Recovery / legacy store — no
+        filter snapshot yet, or a latest snapshot holding a Bloom bitmap
+        (``bits`` column) — rebuilds a cuckoo image once from the
+        frontier's non-expired rows."""
+        cuckoo = self.bloom.read(spark) if self.bloom.snapshots() else None
+        if cuckoo is None or "bits" in cuckoo.columns:
+            live = self.table.read(spark).filter(F.col("state") != "expired")
+            self._commit_bloom_batch(
+                spark, live.select("url_hash"), "rebuild", rebuild=True
+            )
+            cuckoo = self.bloom.read(spark)
+        return cuckoo
+
     def retire_seen(self, spark: SparkSession, hashes: DataFrame) -> None:
-        """Remove url_hashes from the seen filter (cuckoo only —
-        deletion is the capability the cuckoo variant exists for;
-        e.g. retiring expired frontier rows so their urls can recrawl).
-        Commits a new filter snapshot."""
-        if self.seen_filter != "cuckoo":
-            raise ValueError("retire_seen requires seen_filter='cuckoo'")
+        """Remove url_hashes from the seen filter — deletion is what the
+        cuckoo filter exists for (e.g. retiring expired frontier rows so
+        their urls can recrawl).  Commits a new filter snapshot."""
         self.bloom.commit(
             D.cuckoo_delete(
-                self.bloom.read(spark), hashes, n_shards=self.n_bloom_shards
+                self._read_cuckoo(spark), hashes, n_shards=self.n_bloom_shards
             ),
             note="retire",
         )
@@ -251,8 +202,8 @@ class FrontierStore:
             .withColumn("fetch_ts", F.lit(None).cast("timestamp"))
             .withColumn("partition_salt", F.lit(0))
         )
-        # bloom first (see insert() for the ordering argument); persist:
-        # the canonicalizer UDF lineage feeds both the bloom build and
+        # filter first (see insert() for the ordering argument); persist:
+        # the canonicalizer UDF lineage feeds both the filter build and
         # the base commit
         frontier = frontier.persist(StorageLevel.MEMORY_AND_DISK)
         try:
@@ -270,7 +221,7 @@ class FrontierStore:
     def insert(
         self, spark: SparkSession, urls: DataFrame, run_ts: str, depth: int = 1
     ) -> tuple[str, int, int]:
-        """Dedup incoming urls against the frontier (bloom prefilter +
+        """Dedup incoming urls against the frontier (cuckoo prefilter +
         shard-aligned exact confirm), append survivors as a queued DELTA
         (O(|batch|) bytes).  Returns (snapshot_id, n_inserted,
         n_deduped).
@@ -278,9 +229,9 @@ class FrontierStore:
         The batch is persisted once and every count comes off that
         cache — the round-1 version recomputed the canonicalizer +
         dedup lineage three times (canon.count, fresh.count, commit).
-        The Bloom filter is the STORED one, incrementally OR-merged with
-        this batch's filter afterwards — one O(|batch|) build per
-        insert, never a rebuild from the full frontier."""
+        The filter is the STORED one; the survivors are inserted into
+        it afterwards — one O(|batch|) update per insert, never a
+        rebuild from the full frontier."""
         frontier = self.table.read(spark)
         batch = with_url_canon(urls).dropDuplicates(["url_hash"]).persist(
             StorageLevel.MEMORY_AND_DISK
@@ -291,28 +242,20 @@ class FrontierStore:
                 canon = canon.withColumn("seed_rcp_no", F.lit(None).cast("string"))
             if "priority" not in canon.columns:
                 canon = canon.withColumn("priority", F.lit(0.0))
-            if self.bloom.snapshots():
-                bloom = self.bloom.read(spark)
-            else:  # recovery / legacy store: rebuild once from the table
-                self._commit_bloom_batch(
-                    spark, frontier.select("url_hash"), "rebuild"
-                )
-                bloom = self.bloom.read(spark)
+            cuckoo = self._read_cuckoo(spark)
             n_in = batch.count()
-            seen = frontier
-            if self.seen_filter == "cuckoo":
-                # expired rows are tombstones: retire_seen already pulled
-                # their hashes from the filter, but a filter false
-                # positive (~1.2e-4 at 16-bit tags) would exact-confirm
-                # against the tombstone row itself and permanently dedup
-                # a url expire() promised could resurrect — the exact
-                # confirm must never see tombstones
-                seen = frontier.filter(F.col("state") != "expired")
+            # expired rows are tombstones: retire_seen already pulled
+            # their hashes from the filter, but a filter false positive
+            # (~1.2e-4 at 16-bit tags) would exact-confirm against the
+            # tombstone row itself and permanently dedup a url expire()
+            # promised could resurrect — the exact confirm must never
+            # see tombstones
+            seen = frontier.filter(F.col("state") != "expired")
             fresh = (
                 D.dedup_urls(
                     canon,
                     seen,
-                    bloom,
+                    cuckoo,
                     self.n_bloom_shards,
                     # overlap ≤ |batch| — keeps dedup's zero-extra-action
                     # broadcast plan whenever the batch itself is small
@@ -327,8 +270,8 @@ class FrontierStore:
                 .persist(StorageLevel.MEMORY_AND_DISK)
             )
             n_fresh = fresh.count()
-            # bloom FIRST, frontier delta second: a crash in between
-            # leaves extra bloom keys (harmless — exact confirm rejects
+            # filter FIRST, frontier delta second: a crash in between
+            # leaves extra filter keys (harmless — exact confirm rejects
             # them), while the reverse order could leave a frontier row
             # the filter doesn't know → a later duplicate insert would
             # last-wins reset that row's state
@@ -588,15 +531,12 @@ class FrontierStore:
     ) -> int:
         """Retire terminal rows older than ``before_ts`` from the crawl:
         an O(|expired|) delta marks them ``state='expired'`` (a terminal
-        tombstone — the row stays for lineage/time-travel) and, on a
-        cuckoo-backed store, their hashes leave the seen filter, so a
-        LATER rediscovery inserts a fresh queued row whose last-wins
-        merge resurrects the url.  Reference analog: the 7-day mtime
-        cleanup (/root/reference/dart_api_manager.py:582-602), as state
-        data instead of filesystem deletes.  On a bloom-backed store the
-        filter keeps the hash (deletions are impossible there) — expired
-        urls then stay deduped until a compaction rebuild; that asymmetry
-        is exactly why the cuckoo variant exists."""
+        tombstone — the row stays for lineage/time-travel) and their
+        hashes leave the seen filter, so a LATER rediscovery inserts a
+        fresh queued row whose last-wins merge resurrects the url.
+        Reference analog: the reference crawler's 7-day mtime cleanup
+        (dart_api_manager.py:582-602), as state data instead of
+        filesystem deletes."""
         frontier = self.table.read(spark)
         old = frontier.filter(
             F.col("state").isin(*states)
@@ -613,6 +553,10 @@ class FrontierStore:
         )
         n = changed.count()
         if n:
+            # a legacy store rebuilds its filter BEFORE the tombstones
+            # land, so the rebuild holds exactly the keys retired below
+            # (deleting an absent key could evict a colliding live tag)
+            self._read_cuckoo(spark)
             self.table.commit_delta(spark, changed, note=f"expire<{before_ts}")
             self.metrics.commit(
                 changed.groupBy(
@@ -624,8 +568,7 @@ class FrontierStore:
                 .withColumnRenamed("count", "n"),
                 note="expire lineage",
             )
-            if self.seen_filter == "cuckoo":
-                self.retire_seen(spark, changed.select("url_hash"))
+            self.retire_seen(spark, changed.select("url_hash"))
         return n
 
     def _maybe_compact_metrics(self, spark: SparkSession) -> None:

@@ -140,14 +140,14 @@ class CrawlBench:
     its own work:
 
       setup (UNTIMED)  — the durable artifacts a round inherits from
-        previous rounds: the seen-hash set and its incrementally-merged
-        Bloom filter.  Rebuilding them per measurement would charge the
+        previous rounds: the seen-hash set and its incrementally-updated
+        cuckoo filter.  Rebuilding them per measurement would charge the
         round for work the engine explicitly never repeats
-        (FrontierStore keeps the bloom as a durable OR-merged artifact).
+        (FrontierStore keeps the filter as a durable artifact).
       insert (timed)   — discovery-side: canonicalize the batch (pandas
         UDF, persisted ONCE — unpersisted, multiple consumers race to
         compute the cache and 3×cores python workers oversubscribe the
-        box) and dedup against seen via the bloom+exact cogroup.
+        box) and dedup against seen via the cuckoo+exact cogroup.
       pop (timed)      — politeness round over the deduped frontier:
         robots gate, per-host budgets, salted top-k, selection.
       extract (timed)  — wide-matrix XBRL parse of fetched pages
@@ -172,10 +172,10 @@ class CrawlBench:
             with_url_canon(seen_urls).select("url_hash").persist(self._lvl)
         )
         self.seen.count()
-        self.bloom = D.build_seen_filter(
+        self.cuckoo = D.build_cuckoo_filter(
             self.seen, n_shards=64, expected_keys=n_urls // 10
         ).persist(self._lvl)
-        self.bloom.count()
+        self.cuckoo.count()
         # small-host delay 5 ms: budget 40 k keeps the 211 small hosts
         # in the BYPASS regime up to a 20 M-row pop frontier (they hold
         # 0.4/211 of it), so the measured pop work is the skew path —
@@ -193,7 +193,7 @@ class CrawlBench:
         self.frontier = None
 
     def insert_job(self) -> int:
-        """Timed: canonicalize + bloom/exact dedup.  Leaves the deduped
+        """Timed: canonicalize + cuckoo/exact dedup.  Leaves the deduped
         frontier persisted+materialized — the production analog is the
         frontier table on storage between stages (pop_round has several
         consumers; a lazy persist lets them race to compute the cache →
@@ -211,7 +211,7 @@ class CrawlBench:
             D.dedup_urls(
                 canon.drop("id"),
                 self.seen,
-                self.bloom,
+                self.cuckoo,
                 n_shards=64,
                 max_confirmed_hint=self.n_urls // 10 + 1,
             )
@@ -305,7 +305,7 @@ class CrawlBench:
         return popped.filter(F.col("selected")).count()
 
     def close(self) -> None:
-        for df in (self.seen, self.bloom, self.frontier):
+        for df in (self.seen, self.cuckoo, self.frontier):
             if df is not None:
                 df.unpersist()
 

@@ -28,11 +28,20 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 class SnapshotTable:
-    """Append-only snapshot-versioned parquet table."""
+    """Append-only snapshot-versioned parquet table.  ``compression``
+    is the parquet codec of every snapshot it writes (None = the
+    session's default)."""
 
-    def __init__(self, path: str):
+    def __init__(self, path: str, compression: str | None = None):
         self.path = path
+        self.compression = compression
         os.makedirs(path, exist_ok=True)
+
+    def _write(self, df: DataFrame, snap_id: str) -> None:
+        w = df.write.mode("overwrite")
+        if self.compression is not None:
+            w = w.option("compression", self.compression)
+        w.parquet(os.path.join(self.path, snap_id))
 
     @property
     def _manifest_path(self) -> str:
@@ -57,8 +66,7 @@ class SnapshotTable:
         # a reused seq would corrupt MergeTable's last-wins-by-_seq merge
         seq = (snaps[-1]["seq"] + 1) if snaps else 0
         snap_id = f"snap-{seq:06d}-{uuid.uuid4().hex[:8]}"
-        snap_dir = os.path.join(self.path, snap_id)
-        df.write.mode("overwrite").parquet(snap_dir)
+        self._write(df, snap_id)
         entry = {"id": snap_id, "seq": seq, "note": note, "kind": kind}
         self._publish(snaps + [entry])
         return snap_id
@@ -102,7 +110,7 @@ class SnapshotTable:
         snaps = self.snapshots()
         seq = (snaps[-1]["seq"] + 1) if snaps else 0
         snap_id = f"snap-{seq:06d}-{uuid.uuid4().hex[:8]}"
-        df.write.mode("overwrite").parquet(os.path.join(self.path, snap_id))
+        self._write(df, snap_id)
         self._publish([{"id": snap_id, "seq": seq, "note": note, "kind": "base"}])
         self._gc_orphans(shutil)
         return snap_id

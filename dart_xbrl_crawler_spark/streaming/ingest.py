@@ -7,7 +7,8 @@ windows + directory checks.  The streaming twin: ``readStream`` over an
 arriving-parquet directory of pages → canonicalize → watermark on
 ``warc_ts`` (late discovery tolerance) → windowed per-host discovery
 counts, plus a ``foreachBatch`` sink that runs the exact batch dedup
-(bloom + anti-join) per micro-batch — the idempotent MERGE analog.
+(cuckoo filter + exact confirm) per micro-batch — the idempotent MERGE
+analog.
 
 Local smoke uses the file source + ``processAllAvailable`` so a batch
 of fixture rows drives the streaming query to completion synchronously.
@@ -131,8 +132,8 @@ def stream_into_frontier(
     query_name: str = "frontier_ingest",
 ) -> None:
     """foreachBatch sink: each micro-batch of discovered urls goes
-    through the store's exact dedup insert (bloom prefilter + anti-join
-    + snapshot commit) — replaying a batch after a crash re-dedups to a
+    through the store's exact dedup insert (cuckoo prefilter + exact
+    confirm + snapshot commit) — replaying a batch after a crash re-dedups to a
     no-op, which is the exactly-once story."""
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:

@@ -65,7 +65,7 @@ def main() -> None:
 
         canon = with_url_canon(B._batch_urls(spark, 200_000))
         ins = D.dedup_urls(
-            canon.drop("id"), bench.seen, bench.bloom, n_shards=64,
+            canon.drop("id"), bench.seen, bench.cuckoo, n_shards=64,
             max_confirmed_hint=200_000 // 10 + 1,
         )
         with open(os.path.join(OUT, f"crawl_insert_{TAG}.txt"), "w") as f:

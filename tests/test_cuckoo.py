@@ -1,7 +1,7 @@
-"""Partitioned cuckoo filter (the north star's Bloom/cuckoo pairing):
-no false negatives, bounded fpp, shard-aligned incremental insert,
-DELETION (the capability Bloom lacks), dedup_urls interchangeability,
-and FrontierStore wiring."""
+"""Partitioned cuckoo filter (the engine's URL-seen structure): no
+false negatives, bounded fpp, shard-aligned incremental insert,
+DELETION, exact dedup_urls, FrontierStore wiring, and the one-time
+rebuild of a legacy Bloom-format store."""
 
 from __future__ import annotations
 
@@ -75,9 +75,9 @@ def test_cuckoo_filter_probe_and_incremental_insert(spark):
     cf = D.build_cuckoo_filter(
         _hashes_df(spark, seen), n_shards=8, expected_keys=40_000
     )
-    probed = D.probe_seen_cuckoo(_hashes_df(spark, seen[:2000]), cf, n_shards=8)
+    probed = D.probe_seen(_hashes_df(spark, seen[:2000]), cf, n_shards=8)
     assert probed.filter(~F.col("seen_maybe")).count() == 0  # no false neg
-    miss = D.probe_seen_cuckoo(_hashes_df(spark, fresh), cf, n_shards=8)
+    miss = D.probe_seen(_hashes_df(spark, fresh), cf, n_shards=8)
     assert miss.filter(F.col("seen_maybe")).count() <= 5  # fpp tiny
 
     # incremental insert: new keys land, old keys stay, via the stored
@@ -86,7 +86,7 @@ def test_cuckoo_filter_probe_and_incremental_insert(spark):
         cf, _hashes_df(spark, fresh), n_shards=8, expected_per_shard=5_001
     )
     both = np.concatenate([seen[:1000], fresh[:1000]])
-    probed2 = D.probe_seen_cuckoo(_hashes_df(spark, both), cf2, n_shards=8)
+    probed2 = D.probe_seen(_hashes_df(spark, both), cf2, n_shards=8)
     assert probed2.filter(~F.col("seen_maybe")).count() == 0
 
 
@@ -98,15 +98,14 @@ def test_cuckoo_delete_spark(spark):
     )
     gone, keep = keys[::2], keys[1::2]
     cf2 = D.cuckoo_delete(cf, _hashes_df(spark, gone), n_shards=4)
-    kept = D.probe_seen_cuckoo(_hashes_df(spark, keep), cf2, n_shards=4)
+    kept = D.probe_seen(_hashes_df(spark, keep), cf2, n_shards=4)
     assert kept.filter(~F.col("seen_maybe")).count() == 0
-    dropped = D.probe_seen_cuckoo(_hashes_df(spark, gone), cf2, n_shards=4)
+    dropped = D.probe_seen(_hashes_df(spark, gone), cf2, n_shards=4)
     assert dropped.filter(F.col("seen_maybe")).count() <= 4
 
 
 def test_dedup_urls_with_cuckoo_filter_exact(spark):
-    """dedup_urls takes the cuckoo table interchangeably with the bloom
-    and still returns EXACTLY frontier − seen."""
+    """dedup_urls with the cuckoo table returns EXACTLY frontier − seen."""
     from dart_xbrl_crawler_spark.functions.urls import with_url_canon
 
     urls = [f"https://cd.example/p{i}" for i in range(400)]
@@ -123,14 +122,13 @@ def test_dedup_urls_with_cuckoo_filter_exact(spark):
 
 
 def test_frontier_store_cuckoo_end_to_end(spark, tmp_path):
-    """FrontierStore(seen_filter='cuckoo'): bootstrap → insert dedups
-    exactly; retire_seen removes hashes so the same urls re-insert —
-    the expiry/recrawl path a Bloom-backed store cannot offer."""
+    """FrontierStore: bootstrap → insert dedups exactly; retire_seen
+    removes hashes so the same urls re-insert — the expiry/recrawl
+    path."""
     from dart_xbrl_crawler_spark.operators.frontier import FrontierStore
 
     store = FrontierStore(
-        str(tmp_path / "ck"), n_bloom_shards=4, expected_keys=4_096,
-        seen_filter="cuckoo",
+        str(tmp_path / "ck"), n_bloom_shards=4, expected_keys=4_096
     )
     seeds = spark.createDataFrame(
         pd.DataFrame(
@@ -168,13 +166,13 @@ def test_frontier_store_cuckoo_end_to_end(spark, tmp_path):
     # from the filter alone is not enough to re-insert while the table
     # row exists, so this asserts the FILTER state directly
     cf = store.bloom.read(spark)
-    probed = D.probe_seen_cuckoo(retire, cf, n_shards=4)
+    probed = D.probe_seen(retire, cf, n_shards=4)
     assert probed.filter(F.col("seen_maybe")).count() == 0
     del again
 
 
 # ------------------------------------------- recrawl / expire loop
-def _mini_crawl_store(spark, tmp_path, seen_filter="cuckoo"):
+def _mini_crawl_store(spark, tmp_path):
     from dart_xbrl_crawler_spark.operators.frontier import FrontierStore
 
     pages = spark.createDataFrame(
@@ -192,8 +190,7 @@ def _mini_crawl_store(spark, tmp_path, seen_filter="cuckoo"):
         schema="host string, disallow_prefix string, crawl_delay_ms long",
     )
     store = FrontierStore(
-        str(tmp_path / seen_filter), n_bloom_shards=4, expected_keys=4_096,
-        seen_filter=seen_filter,
+        str(tmp_path / "rc"), n_bloom_shards=4, expected_keys=4_096
     )
     store.bootstrap(
         spark.createDataFrame(
@@ -231,8 +228,7 @@ def test_recrawl_requeues_stale_rows(spark, tmp_path):
 def test_expire_tombstones_and_allows_reinsert(spark, tmp_path):
     """Expired rows tombstone (state='expired'), their hashes leave the
     cuckoo filter, and a rediscovered url re-inserts as a FRESH queued
-    row (last-wins resurrection) — while a bloom-backed store keeps
-    deduping it (the documented asymmetry)."""
+    row (last-wins resurrection)."""
     store, pages, robots = _mini_crawl_store(spark, tmp_path)
     n = store.expire(spark, "2026-02-01 00:00:00")
     assert n == 6
@@ -250,87 +246,130 @@ def test_expire_tombstones_and_allows_reinsert(spark, tmp_path):
     counts = store.state_counts(spark)
     assert counts == {"expired": 5, "queued": 2}
 
-    # bloom twin: same flow, the expired url STAYS deduped
-    store_b, _, _ = _mini_crawl_store(spark, tmp_path, seen_filter="bloom")
-    store_b.expire(spark, "2026-02-01 00:00:00")
-    _, n_ins_b, n_dup_b = store_b.insert(spark, batch, "2026-03-01 00:00:00")
-    assert (n_ins_b, n_dup_b) == (1, 1)
 
 
-def test_store_remembers_filter_kind(spark, tmp_path):
-    """seen_filter persists in the store config at the FIRST WRITE
-    (bootstrap/insert — a read-only open like `status` on an empty path
-    must not pin the kind): a later process reopens with the right
-    semantics, and a conflicting explicit argument errors instead of
-    silently mixing filters."""
+def test_legacy_bloom_store_rebuilds_once(spark, tmp_path):
+    """A store written when the seen filter was a Bloom bitmap (latest
+    filter snapshot with a ``bits`` column, plus the old config
+    sidecar) reopens without options: the first insert rebuilds a
+    cuckoo image once from the non-expired rows, dedup stays exact,
+    and a url expired under the Bloom filter resurrects."""
+    import json
+
     from dart_xbrl_crawler_spark.operators.frontier import FrontierStore
 
-    seeds = spark.createDataFrame(
-        pd.DataFrame({"url": ["https://cfg.example/a"], "priority": [0.0]})
+    store, _, _ = _mini_crawl_store(spark, tmp_path)
+    live = spark.createDataFrame(
+        pd.DataFrame({"url": ["https://rc.example/q0"], "priority": [0.0]})
     )
-    p = str(tmp_path / "cfg")
-    # a pre-creation read-only open does NOT pin the kind...
-    FrontierStore(p)
-    store = FrontierStore(p, seen_filter="cuckoo")  # ...so this still works
-    store.bootstrap(seeds, RUN_TS)  # first write stamps the config
-    assert FrontierStore(p).seen_filter == "cuckoo"  # default reopen
-    assert FrontierStore(p, seen_filter="cuckoo").seen_filter == "cuckoo"
-    with pytest.raises(ValueError):
-        FrontierStore(p, seen_filter="bloom")
-    # default-created stores pin bloom at their first write too — a
-    # later explicit cuckoo reopen errors instead of misreading the
-    # bloom snapshot chain as cuckoo tables
-    p2 = str(tmp_path / "cfg2")
-    FrontierStore(p2).bootstrap(seeds, RUN_TS)
-    assert FrontierStore(p2).seen_filter == "bloom"
-    with pytest.raises(ValueError):
-        FrontierStore(p2, seen_filter="cuckoo")
+    assert store.insert(spark, live, RUN_TS)[1:] == (1, 0)
+    assert store.expire(spark, "2026-02-01 00:00:00", states=("fetched",)) == 6
+    # hand-write the legacy layout: a Bloom image (every bit set, so it
+    # would flag everything) replaces the whole filter chain
+    store.bloom.rewrite(
+        spark.createDataFrame(
+            [(s, b"\xff" * 64, 512, 7, 7) for s in range(4)],
+            schema="shard int, bits binary, m_bits long, k_hashes int, n_keys long",
+        ),
+        note="legacy bloom",
+    )
+    with open(store.table_path + "_config.json", "w") as f:
+        json.dump({"seen_filter": "bloom"}, f)
+
+    reopened = FrontierStore(store.table_path, n_bloom_shards=4, expected_keys=4_096)
+    batch = spark.createDataFrame(
+        pd.DataFrame(
+            {"url": ["https://rc.example/p0", "https://rc.example/q0",
+                      "https://rc.example/new"],
+             "priority": [0.0] * 3}
+        )
+    )
+    _, n_ins, n_dup = reopened.insert(spark, batch, "2026-03-01 00:00:00")
+    assert (n_ins, n_dup) == (2, 1)  # p0 resurrects, q0 stays deduped
+    assert reopened.state_counts(spark) == {"expired": 5, "queued": 3}
+    assert "table" in reopened.bloom.read(spark).columns
+    # the rebuilt image is durable: a repeat insert dedups without a
+    # second rebuild
+    _, n_ins, n_dup = reopened.insert(spark, batch, "2026-03-01 00:00:00")
+    assert (n_ins, n_dup) == (0, 3)
+    notes = [snap["note"] for snap in reopened.bloom.snapshots()]
+    assert notes.count("rebuild") == 1
+
+
+def test_filter_snapshots_are_zstd(spark, tmp_path):
+    """The filter table writes zstd (a lifetime-sized cuckoo image is
+    mostly empty slots, which snappy barely shrinks); the frontier
+    table keeps the session's default codec."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from dart_xbrl_crawler_spark.operators.frontier import FrontierStore
+
+    store = FrontierStore(str(tmp_path / "z"), n_bloom_shards=4, expected_keys=4_096)
+    store.bootstrap(
+        spark.createDataFrame(
+            pd.DataFrame({"url": ["https://z.example/a"], "priority": [0.0]})
+        ),
+        RUN_TS,
+    )
+
+    def codecs(path):
+        out = set()
+        for f in glob.glob(f"{path}/snap-*/*.parquet"):
+            md = pq.ParquetFile(f).metadata
+            for rg in range(md.num_row_groups):
+                for c in range(md.num_columns):
+                    out.add(md.row_group(rg).column(c).compression)
+        return out
+
+    assert codecs(str(tmp_path / "z") + "_bloom") == {"ZSTD"}
+    assert codecs(str(tmp_path / "z")) == {"SNAPPY"}
 
 
 def test_filter_chain_bounded(spark, tmp_path):
     """Each insert commits a FULL filter image (≈12 GB at the 10^10
-    design point) — the chain must not grow one copy per round.  Both
-    store kinds keep ≤ filter_keep_last snapshots on disk while dedup
+    design point) — the chain must not grow one copy per round.  The
+    store keeps ≤ filter_keep_last snapshots on disk while dedup
     exactness is unaffected."""
     import os
 
     from dart_xbrl_crawler_spark.operators.frontier import FrontierStore
 
-    for kind in ("bloom", "cuckoo"):
-        store = FrontierStore(
-            str(tmp_path / kind), n_bloom_shards=4, expected_keys=4_096,
-            seen_filter=kind, filter_keep_last=3,
-        )
-        store.bootstrap(
-            spark.createDataFrame(
-                pd.DataFrame({"url": ["https://fb.example/seed"], "priority": [0.0]})
-            ),
-            RUN_TS,
-        )
-        for i in range(6):
-            batch = spark.createDataFrame(
-                pd.DataFrame(
-                    {"url": [f"https://fb.example/b{i}-{j}" for j in range(5)],
-                     "priority": [0.0] * 5}
-                )
+    store = FrontierStore(
+        str(tmp_path / "fb"), n_bloom_shards=4, expected_keys=4_096,
+        filter_keep_last=3,
+    )
+    store.bootstrap(
+        spark.createDataFrame(
+            pd.DataFrame({"url": ["https://fb.example/seed"], "priority": [0.0]})
+        ),
+        RUN_TS,
+    )
+    for i in range(6):
+        batch = spark.createDataFrame(
+            pd.DataFrame(
+                {"url": [f"https://fb.example/b{i}-{j}" for j in range(5)],
+                 "priority": [0.0] * 5}
             )
-            _, n_ins, n_dup = store.insert(spark, batch, RUN_TS)
-            assert (n_ins, n_dup) == (5, 0)
-        assert len(store.bloom.snapshots()) <= 3
-        dirs = [d for d in os.listdir(str(tmp_path / kind) + "_bloom")
-                if d.startswith("snap-")]
-        assert len(dirs) <= 3  # old full images GC'd from disk
-        # dedup still exact after expiry
-        _, n_ins, n_dup = store.insert(
-            spark,
-            spark.createDataFrame(
-                pd.DataFrame({"url": ["https://fb.example/b0-0",
-                                       "https://fb.example/freshest"],
-                              "priority": [0.0] * 2})
-            ),
-            RUN_TS,
         )
-        assert (n_ins, n_dup) == (1, 1)
+        _, n_ins, n_dup = store.insert(spark, batch, RUN_TS)
+        assert (n_ins, n_dup) == (5, 0)
+    assert len(store.bloom.snapshots()) <= 3
+    dirs = [d for d in os.listdir(str(tmp_path / "fb") + "_bloom")
+            if d.startswith("snap-")]
+    assert len(dirs) <= 3  # old full images GC'd from disk
+    # dedup still exact after expiry
+    _, n_ins, n_dup = store.insert(
+        spark,
+        spark.createDataFrame(
+            pd.DataFrame({"url": ["https://fb.example/b0-0",
+                                   "https://fb.example/freshest"],
+                          "priority": [0.0] * 2})
+        ),
+        RUN_TS,
+    )
+    assert (n_ins, n_dup) == (1, 1)
 
 
 def test_recrawl_covers_failed_rows(spark, tmp_path):

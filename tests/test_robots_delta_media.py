@@ -141,7 +141,7 @@ def test_delta_commit_bytes_scale_with_round(spark, tmp_path):
 
 
 def test_incremental_bloom_across_inserts(spark, tmp_path):
-    """The URL-seen filter is a durable artifact OR-merged per insert —
+    """The URL-seen filter is a durable artifact updated per insert —
     never rebuilt from the full frontier — and dedup stays exact."""
     from dart_xbrl_crawler_spark.operators.frontier import FrontierStore
 
@@ -155,8 +155,8 @@ def test_incremental_bloom_across_inserts(spark, tmp_path):
     # overlapping insert: 500 dupes + 500 new
     _, n_ins, n_dup = store.insert(spark, mk(500, 1500), RUN_TS)
     assert (n_ins, n_dup) == (500, 500)
-    assert len(store.bloom.snapshots()) == 2  # ONE merged commit, no rebuild
-    # fully-duplicate insert → nothing enters, no bloom commit
+    assert len(store.bloom.snapshots()) == 2  # ONE filter commit, no rebuild
+    # fully-duplicate insert → nothing enters, no filter commit
     _, n_ins2, n_dup2 = store.insert(spark, mk(0, 1500), RUN_TS)
     assert (n_ins2, n_dup2) == (0, 1500)
     assert len(store.bloom.snapshots()) == 2

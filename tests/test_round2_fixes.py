@@ -1,6 +1,6 @@
 """Round-2 regression tests: wide→long unpivot semantics, corp-name
-loose fallback, pages_with_meta column collision, bloom sizing across
-Arrow chunks."""
+loose fallback, pages_with_meta column collision, seen-filter sizing
+across Arrow chunks."""
 
 from __future__ import annotations
 
@@ -180,22 +180,26 @@ def test_pages_with_meta_no_ambiguous_columns(spark, fixture_bundle):
 
 
 # ---------------------------------------------------------------------
-# bloom: per-shard sizing must cover ALL Arrow chunks of a partition
+# seen filter: per-shard sizing must cover ALL Arrow chunks of a partition
 # ---------------------------------------------------------------------
 
-def test_bloom_sizing_spans_arrow_chunks(spark):
+def test_cuckoo_sizing_spans_arrow_chunks(spark):
     # 40k keys in 4 shards → ~10k keys/shard, far beyond one ~2048-row
-    # Arrow chunk; with the old first-chunk sizing, n_keys ≫ m/10 and
-    # the observed fpp explodes
+    # Arrow chunk; a shard sized from its first chunk alone overflows
     n = 40_000
-    seen = spark.range(n).select((F.col("id") * 4).alias("url_hash"))
-    bloom = D.build_seen_filter(seen, n_shards=4).toPandas()
-    assert int(bloom["n_keys"].sum()) == n
-    for _, row in bloom.iterrows():
-        # sized for the full shard at fpp=0.01 → ≥9.5 bits/key
-        assert row["m_bits"] >= 9 * row["n_keys"]
+    seen = spark.range(n).select(F.xxhash64("id").alias("url_hash"))
+    cuckoo = D.build_cuckoo_filter(seen, n_shards=4).toPandas()
+    assert len(cuckoo) == 4 and int(cuckoo["n_keys"].sum()) == n
+    for _, row in cuckoo.iterrows():
+        # sized for the full shard at ≤ 0.84 load over 4-slot buckets
+        assert row["m_buckets"] * 4 * 0.84 >= row["n_keys"]
+    cuckoo_df = D.build_cuckoo_filter(seen, n_shards=4)
+    # no false negatives over every chunk of every shard
+    probed = D.probe_seen(seen, cuckoo_df, n_shards=4)
+    assert probed.filter(~F.col("seen_maybe")).count() == 0
     # observed fpp on a disjoint probe set stays near the target
-    bloom_df = D.build_seen_filter(seen, n_shards=4)
-    probe = spark.range(n).select((F.col("id") * 4 + 1).alias("url_hash"))
-    fresh = D.dedup_urls(probe, seen, bloom_df, n_shards=4)
+    probe = spark.range(n, 2 * n).select(F.xxhash64("id").alias("url_hash"))
+    flagged = D.probe_seen(probe, cuckoo_df, n_shards=4)
+    assert flagged.filter(F.col("seen_maybe")).count() < 0.001 * n
+    fresh = D.dedup_urls(probe, seen, cuckoo_df, n_shards=4)
     assert fresh.count() == n  # exactness: nothing falsely removed

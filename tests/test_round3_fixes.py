@@ -173,15 +173,15 @@ def test_dedup_no_hint_large_overlap_no_forced_broadcast(spark):
         )
     )
     seen = canon.filter(F.col("id") % 2 == 0).select("url_hash")
-    bloom = D.build_seen_filter(seen, n_shards=8)
+    cuckoo = D.build_cuckoo_filter(seen, n_shards=8)
     out = D.dedup_urls(
-        canon.drop("id"), seen, bloom, n_shards=8, broadcast_max_rows=100
+        canon.drop("id"), seen, cuckoo, n_shards=8, broadcast_max_rows=100
     )
     assert out.count() == 2000  # exact: odd ids survive
     assert "BroadcastHashJoin" not in _plan(out)
     # with a fitting hint the broadcast fast path is kept
     out2 = D.dedup_urls(
-        canon.drop("id"), seen, bloom, n_shards=8, max_confirmed_hint=4000
+        canon.drop("id"), seen, cuckoo, n_shards=8, max_confirmed_hint=4000
     )
     assert out2.count() == 2000
     assert "BroadcastHashJoin" in _plan(out2)

@@ -43,7 +43,7 @@ def test_fetch_partition_count_scales_with_selected(spark):
 def _bootstrap_cuckoo_store(spark, path, urls):
     from dart_xbrl_crawler_spark.operators.frontier import FrontierStore
 
-    store = FrontierStore(str(path), n_bloom_shards=4, seen_filter="cuckoo")
+    store = FrontierStore(str(path), n_bloom_shards=4)
     seeds = spark.createDataFrame(
         pd.DataFrame({"url": urls, "priority": [0.0] * len(urls)})
     )

@@ -5,7 +5,10 @@ changed an operator's internals gets an equivalence gate here.
   exactly with_url_canon's values on every input — eligible, ineligible
   and adversarial spellings;
 * pop_round's regime-prefilter restructure must keep the selected set
-  and host_rank values identical to a straightforward recomputation.
+  and host_rank values identical to a straightforward recomputation;
+* the fast in-memory ZIP reader must defer every irregular archive to
+  zipfile, and the charset sniff's even-length head clamp is pinned on
+  odd-length short payloads.
 """
 
 from __future__ import annotations
@@ -56,6 +59,10 @@ ADVERSARIAL_URLS = [
     "https://h.example/p?~x=.&_y=-",
     "https://h.example/a//b///c",
     "https://h.example/p?k" + "&k=" ,  # duplicate key w/ and w/o '='
+    "https://h.example/p\n",  # Java's $ matches before a final \n
+    "https://h.example/p?a=1\r\n",
+    "https://h.example\n",
+    "https://h.example/p#frag\n",
 ]
 
 
@@ -102,6 +109,22 @@ def test_split_matches_udf_on_generated_corpus(spark):
     assert a == b
 
 
+def test_split_keeps_null_urls(spark):
+    """rlike(NULL) is NULL, so a NULL url matches neither side of the
+    split by itself: it must reach the UDF branch, not vanish."""
+    urls = ["https://h.example/p", None, "https://user@h.example/q", None]
+    df = spark.createDataFrame(
+        pd.DataFrame({"url": urls, "tag": range(len(urls))}),
+        schema="url string, tag long",
+    )
+    split = with_url_canon_split(df)
+    assert split.count() == len(urls)
+    assert with_url_canon(df).count() == len(urls)
+    nulls = split.filter(F.col("url").isNull())
+    assert nulls.count() == 2
+    assert nulls.filter(F.col("url_canon").isNotNull()).count() == 0
+
+
 def test_fast_regex_is_subset_of_python_fast_path():
     """Every URL the Catalyst gate accepts must be one canonicalize_one
     handles on its own fast path (no urllib fallback) — the Catalyst
@@ -112,7 +135,8 @@ def test_fast_regex_is_subset_of_python_fast_path():
     import re
     from unittest import mock
 
-    rx = re.compile(_FAST_URL_RE)
+    # Python spells Java's end-of-input \z as \Z
+    rx = re.compile(_FAST_URL_RE.replace(r"\z", r"\Z"))
     from dart_xbrl_crawler_spark.functions import urls as U
 
     for u in ADVERSARIAL_URLS:
@@ -269,3 +293,64 @@ def test_simhash_pairs_filters_before_pair_dedup(spark):
         s = line.strip().lstrip("+-: ")
         if s.startswith(("Deduplicate", "Aggregate")):
             assert "a_sig" not in s and "b_sig" not in s, s
+
+
+# ------------------------------------------ fast ZIP reader vs zipfile
+def _stdlib_parse(data: bytes):
+    """parse_document with the fast reader switched off."""
+    from unittest import mock
+
+    from dart_xbrl_crawler_spark import doc_parsers
+
+    with mock.patch.object(doc_parsers, "_zip_entries_fast", return_value=None):
+        return doc_parsers.parse_document(data)
+
+
+def test_fast_zip_reader_defers_crafted_archives():
+    """A local header whose name differs from the central directory's,
+    or a central-directory uncompressed size that disagrees with the
+    inflated member, sends the archive to zipfile, which alone decides
+    (the fast reader used to accept both)."""
+    import random
+    import struct
+
+    from dart_xbrl_crawler_spark import doc_parsers, fixtures
+
+    doc = fixtures._mk_doc(random.Random(0), 2025, 3)
+    good = fixtures.build_mini_xbrl_zip("00000001", "2025-03-31", doc)
+    assert doc_parsers._zip_entries_fast(good) is not None
+    corp, parsed = doc_parsers.parse_document(good)
+    assert corp == "00000001" and parsed is not None
+    assert _stdlib_parse(good) == (corp, parsed)
+
+    loc = good.index(b"PK\x03\x04")
+    renamed = good[: loc + 30] + b"X" + good[loc + 31 :]
+    cen = good.index(b"PK\x01\x02")
+    (usize,) = struct.unpack("<L", good[cen + 24 : cen + 28])
+    longer, shorter = (
+        good[: cen + 24] + struct.pack("<L", usize + d) + good[cen + 28 :]
+        for d in (1, -1)
+    )
+    for crafted in (renamed, longer, shorter):
+        assert doc_parsers._zip_entries_fast(crafted) is None
+        assert doc_parsers.parse_document(crafted) == _stdlib_parse(crafted)
+    # zipfile rejects the name mismatch and the truncating size (its
+    # CRC then fails); the overstated size still reads to a valid CRC
+    assert doc_parsers.parse_document(renamed) == (None, None)
+    assert doc_parsers.parse_document(shorter) == (None, None)
+    assert doc_parsers.parse_document(longer) == (corp, parsed)
+
+
+# -------------------------------- charset sniff on odd-length payloads
+def test_sniff_charset_odd_length_short_payloads():
+    """The NUL-stripe test reads an even-length head, so an odd trailing
+    byte never counts: a lone NUL is UTF-8 (it was utf-16-be before the
+    clamp), and truncated BOM-less UTF-16 keeps its byte order."""
+    from dart_xbrl_crawler_spark.functions.charset import sniff_charset
+
+    assert sniff_charset(b"\x00") == "utf-8"
+    assert sniff_charset(b"\x00\x00\x00") == "utf-8"
+    assert sniff_charset("hello".encode("utf-16-be")[:-1]) == "utf-16-be"
+    assert sniff_charset("hello".encode("utf-16-le")[:-1]) == "utf-16-le"
+    assert sniff_charset(b"\x00a\x00") == "utf-16-be"
+    assert sniff_charset(b"a\x00b") == "utf-16-le"
