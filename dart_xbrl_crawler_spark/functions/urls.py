@@ -162,12 +162,8 @@ def _canonicalize_udf(urls: pd.Series) -> pd.DataFrame:
 def with_url_canon(df: DataFrame, url_col: str = "url") -> DataFrame:
     """Add url_canon, host, url_hash columns.  xxhash64 stays JVM-side.
 
-    Single-pass pandas-UDF form: safe for any upstream (the input frame
-    is scanned exactly once).  Hot paths whose upstream is cheap to
-    rescan (generated batches, parquet scans) should prefer
-    :func:`with_url_canon_split`, which canonicalizes the common URL
-    shape entirely in Catalyst codegen and falls back to this UDF only
-    for rows that need the general parser."""
+    Single pass: the input frame is scanned exactly once, every row is
+    kept, and a NULL url yields NULL url_canon/host."""
     return (
         df.withColumn("_c", _canonicalize_udf(F.col(url_col)))
         .withColumn("url_canon", F.col("_c.url_canon"))
@@ -175,101 +171,6 @@ def with_url_canon(df: DataFrame, url_col: str = "url") -> DataFrame:
         .drop("_c")
         .withColumn("url_hash", F.xxhash64("url_canon"))
     )
-
-
-# ---------------------------------------------------------------------
-# Catalyst fast-path canonicalizer (guide §4.1: built-ins beat any UDF).
-#
-# _FAST_URL_RE is a CONSERVATIVE eligibility gate: any URL it matches is
-# provably handled bit-identically by the Catalyst expressions below
-# (property-tested against canonicalize_one); anything else — userinfo,
-# %-escapes, ipv6, whitespace, multi-'=' pairs, query-without-path —
-# takes the pandas-UDF fallback, whose kernel IS canonicalize_one, so
-# the split can never change a value, only where it is computed.
-# ---------------------------------------------------------------------
-_FAST_URL_RE = (
-    r"^[A-Za-z][A-Za-z0-9+.\-]*://"  # scheme (find('://') > 0 shape)
-    r"[A-Za-z0-9.\-]+(:[0-9]+)?"  # _SIMPLE_NETLOC
-    r"(/[^#?%\s]*"  # path: no %-escapes, one '?' max, no whitespace
-    r"(\?([A-Za-z0-9_.~\-]*(=[A-Za-z0-9_.~\-]*)?"  # _SAFE_QUERY and
-    r"(&[A-Za-z0-9_.~\-]*(=[A-Za-z0-9_.~\-]*)?)*)?)?)?"  # ≤1 '=' per kv
-    r"(#\S*)?\z"  # fragment (dropped) — never contains whitespace;
-    # \z, not $: Java's $ also matches before a final line terminator
-)
-
-
-def _canon_fast_exprs(url_col: str) -> tuple[F.Column, F.Column]:
-    """(url_canon, host) as pure Catalyst expressions — valid ONLY for
-    rows matching _FAST_URL_RE (whitespace-free, so strip is a no-op).
-
-    Shape notes (guide §4.1/§7.2): every piece is extracted by ONE
-    anchored regex over the raw url — a deep chain of nested
-    substring_index/when expressions re-evaluates its whole subtree per
-    reference once any non-codegen expression drags the projection into
-    interpreted mode (measured 5× slower than the python UDF), and
-    higher-order array functions (array_sort with a comparator lambda)
-    are exactly such expressions.  The query sort therefore avoids
-    lambdas entirely: each 'k=v' becomes 'k\\x01v' (\\x01 sorts below
-    every character the safe-query charset allows, so plain binary
-    sort_array orders exactly like python's (key, value) tuple sort),
-    then the separator is translated back."""
-    u = F.col(url_col)
-    scheme = F.lower(F.regexp_extract(u, r"^([A-Za-z][A-Za-z0-9+.\-]*)://", 1))
-    netloc = F.lower(F.regexp_extract(u, r"^[^:]+://([^/#]+)", 1))
-    host = F.substring_index(netloc, ":", 1)
-    # default-port drop (python compares the port STRING: ':080' kept —
-    # the $-anchored ':80' regex likewise leaves it alone)
-    netloc2 = (
-        F.when(scheme == "http", F.regexp_replace(netloc, ":80$", ""))
-        .when(scheme == "https", F.regexp_replace(netloc, ":443$", ""))
-        .otherwise(netloc)
-    )
-    path_m = F.regexp_extract(u, r"^[^:]+://[^/#]+(/[^#?]*)", 1)
-    path = F.when(path_m == "", F.lit("/")).otherwise(path_m)
-    query = F.regexp_extract(u, r"^[^#?]*\?([^#]*)", 1)
-    # normalize: drop empty segments, give every pair exactly one '=',
-    # swap it for \x01, binary-sort, join, swap back
-    q1 = F.regexp_replace(
-        F.regexp_replace(query, "&&+", "&"), "^&+|&+$", ""
-    )
-    q2 = F.regexp_replace(q1, "(^|&)([^&=]*)(?=&|$)", "$1$2=")
-    q3 = F.regexp_replace(q2, "(^|&)([^&=]*)=", "$1$2\x01")
-    qsorted = F.translate(
-        F.array_join(F.sort_array(F.split(q3, "&")), "&"), "\x01", "="
-    )
-    canon = F.concat(
-        scheme,
-        F.lit("://"),
-        netloc2,
-        path,
-        F.when(q1 == "", F.lit("")).otherwise(F.concat(F.lit("?"), qsorted)),
-    )
-    return canon, host
-
-
-def with_url_canon_split(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """with_url_canon via a Catalyst fast path: rows matching
-    _FAST_URL_RE are canonicalized in whole-stage codegen (no python
-    worker, no Arrow transfer — the JVM path also scales past the
-    python allocator knee); the rest take the pandas-UDF fallback.
-    Identical values to with_url_canon on every input (property-tested).
-
-    The filter-split scans the input frame twice, so use this where the
-    upstream is cheap to recompute (generated batches, column-pruned
-    scans); keep plain with_url_canon over expensive upstreams like
-    link-extraction output."""
-    eligible = F.col(url_col).rlike(_FAST_URL_RE)
-    canon, host = _canon_fast_exprs(url_col)
-    fast = (
-        df.filter(eligible)
-        .withColumn("url_canon", canon)
-        .withColumn("host", host)
-        .withColumn("url_hash", F.xxhash64("url_canon"))
-    )
-    # rlike(NULL) is NULL, which neither filter keeps: NULL urls go to
-    # the UDF branch explicitly
-    slow = with_url_canon(df.filter(F.coalesce(~eligible, F.lit(True))), url_col)
-    return fast.unionByName(slow)
 
 
 def surt_key(url_canon: F.Column, host: F.Column) -> F.Column:

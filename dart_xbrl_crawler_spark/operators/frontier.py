@@ -146,6 +146,23 @@ class FrontierStore:
         )
         self.bloom.expire(self.filter_keep_last)
 
+    @staticmethod
+    def _lineage_rows(rows: DataFrame, round_id: int, state) -> DataFrame:
+        """Lineage counters (round_id, partition_id, state, n) over
+        ``rows``, one per (partition, state); ``state`` is a state name
+        or a column."""
+        if isinstance(state, str):
+            state = F.lit(state)
+        return (
+            rows.groupBy(
+                F.lit(round_id).alias("round_id"),
+                F.spark_partition_id().alias("partition_id"),
+                state.alias("state"),
+            )
+            .count()
+            .withColumnRenamed("count", "n")
+        )
+
     def _commit_insert_metrics(
         self, spark: SparkSession, fresh: DataFrame, n_fresh: int, n_dup: int
     ) -> None:
@@ -155,15 +172,7 @@ class FrontierStore:
         All inputs are already-materialized caches: O(|batch|)."""
         parts = []
         if n_fresh:
-            parts.append(
-                fresh.groupBy(
-                    F.lit(-1).alias("round_id"),
-                    F.spark_partition_id().alias("partition_id"),
-                    F.lit("queued").alias("state"),
-                )
-                .count()
-                .withColumnRenamed("count", "n")
-            )
+            parts.append(self._lineage_rows(fresh, -1, "queued"))
         if n_dup:
             parts.append(
                 spark.createDataFrame(
@@ -339,8 +348,10 @@ class FrontierStore:
         selected = popped.filter(F.col("selected"))
         fetch_in = P.fetch_partitioning(selected, n_partitions)
 
-        # fetch = equi-join bytes by canonical url (pages keyed the same
-        # way once, at ingest)
+        # fetch = equi-join bytes by canonical url.  pages is
+        # re-canonicalized and re-deduped in full every round — an
+        # O(|pages| × rounds) cost that keying pages once per crawl
+        # would remove (ROADMAP.md, direction 2)
         page_bytes = (
             with_url_canon(pages)
             .select("url_hash", "html", "warc_ts")
@@ -388,16 +399,10 @@ class FrontierStore:
         # round's OWN delta (cached upstream frames) — O(|round|), never
         # a post-commit scan of the merged 10^10-row frontier.  Running
         # totals come from folding the metrics chain (lineage_counts).
-        metrics = (
-            changed.groupBy(
-                F.lit(round_id).alias("round_id"),
-                F.spark_partition_id().alias("partition_id"),
-                "state",
-            )
-            .count()
-            .withColumnRenamed("count", "n")
+        self.metrics.commit(
+            self._lineage_rows(changed, round_id, F.col("state")),
+            note=f"round={round_id}",
         )
-        self.metrics.commit(metrics, note=f"round={round_id}")
         # per-host outcome counters — the input to adaptive politeness
         # backoff (politeness.apply_backoff); O(|round| hosts) rows
         self.host_metrics.commit(
@@ -442,27 +447,28 @@ class FrontierStore:
             F.col("state").isin(*states)
             & (F.col("fetch_ts") < F.to_timestamp(F.lit(before_ts)))
         )
-        # localCheckpoint, not persist: `changed` is consumed AFTER
-        # commit_delta flips these very rows to 'queued' — a lost cache
-        # block would recompute the filter over the post-commit frontier
-        # and silently see nothing; checkpointing truncates the lineage
-        # so the pre-commit selection is pinned (same pattern as
-        # dedup_urls' confirmed set)
+        return self._requeue(spark, stale, f"recrawl<{before_ts}", "recrawl")
+
+    def _requeue(
+        self, spark: SparkSession, stale: DataFrame, note: str, kind: str
+    ) -> int:
+        """Flip ``stale`` rows back to 'queued' in one delta plus its
+        lineage rows; returns the row count.
+
+        localCheckpoint, not persist: `changed` is consumed AFTER
+        commit_delta flips these very rows to 'queued' — a lost cache
+        block would recompute the filter over the post-commit frontier
+        and silently see nothing; checkpointing truncates the lineage
+        so the pre-commit selection is pinned (same pattern as
+        dedup_urls' confirmed set)."""
         changed = stale.withColumn("state", F.lit("queued")).withColumn(
             "fetch_ts", F.lit(None).cast("timestamp")
         ).localCheckpoint(eager=True)
         n = changed.count()
         if n:
-            self.table.commit_delta(spark, changed, note=f"recrawl<{before_ts}")
+            self.table.commit_delta(spark, changed, note=note)
             self.metrics.commit(
-                changed.groupBy(
-                    F.lit(-3).alias("round_id"),
-                    F.spark_partition_id().alias("partition_id"),
-                    F.lit("queued").alias("state"),
-                )
-                .count()
-                .withColumnRenamed("count", "n"),
-                note="recrawl lineage",
+                self._lineage_rows(changed, -3, "queued"), note=f"{kind} lineage"
             )
         return n
 
@@ -480,8 +486,6 @@ class FrontierStore:
         so the hint side shuffles, the base doesn't.  Lastmod accepts
         both W3C forms (date-only and full ISO 8601); unparseable
         hints are dropped, surfaced by the returned count only."""
-        from ..functions.urls import with_url_canon
-
         lastmod_ts = F.coalesce(
             F.try_to_timestamp(F.col("lastmod")),
             F.try_to_timestamp(
@@ -505,23 +509,7 @@ class FrontierStore:
             )
             .drop("_lastmod")
         )
-        changed = stale.withColumn("state", F.lit("queued")).withColumn(
-            "fetch_ts", F.lit(None).cast("timestamp")
-        ).localCheckpoint(eager=True)  # pin pre-commit selection
-        n = changed.count()
-        if n:
-            self.table.commit_delta(spark, changed, note="recrawl-hints")
-            self.metrics.commit(
-                changed.groupBy(
-                    F.lit(-3).alias("round_id"),
-                    F.spark_partition_id().alias("partition_id"),
-                    F.lit("queued").alias("state"),
-                )
-                .count()
-                .withColumnRenamed("count", "n"),
-                note="recrawl-hints lineage",
-            )
-        return n
+        return self._requeue(spark, stale, "recrawl-hints", "recrawl-hints")
 
     def expire(
         self,
@@ -559,14 +547,7 @@ class FrontierStore:
             self._read_cuckoo(spark)
             self.table.commit_delta(spark, changed, note=f"expire<{before_ts}")
             self.metrics.commit(
-                changed.groupBy(
-                    F.lit(-3).alias("round_id"),
-                    F.spark_partition_id().alias("partition_id"),
-                    F.lit("expired").alias("state"),
-                )
-                .count()
-                .withColumnRenamed("count", "n"),
-                note="expire lineage",
+                self._lineage_rows(changed, -3, "expired"), note="expire lineage"
             )
             self.retire_seen(spark, changed.select("url_hash"))
         return n
@@ -664,168 +645,147 @@ class FrontierStore:
         links whose path ends in a static-asset extension (css/js/
         media/archives — functions.traps.is_static_asset); a text
         crawl would fetch those bytes only to discard them."""
-        from ..functions.links import extract_links
+        from ..functions.links import (
+            decode_permissive,
+            extract_feed_entries,
+            extract_links,
+            extract_sitemap_entries,
+            meta_robots_flags,
+        )
+        from ..functions.traps import is_static_asset, is_trap
 
         summaries: list[dict] = []
         try:
-            self._crawl_loop(
-                spark, pages, robots, run_ts, max_rounds, round_ms,
-                salt_buckets, max_per_host, n_partitions, discover,
-                text_out, backoff_factor, priority_decay, extract_links,
-                summaries, broadcast_robots, respect_nofollow,
-                drop_traps, drop_assets,
-            )
+            for rid in range(max_rounds):
+                # compact the metrics chains BETWEEN rounds, never inside
+                # one: compaction rewrites the chains and GCs the old
+                # snapshot dirs, and a round's live frames (popped, fetched,
+                # the backoff-adjusted robots) all carry lazy lineage into
+                # those files — a lost cache block after an in-round
+                # compaction would recompute through deleted dirs and throw.
+                # Here nothing is live yet: the previous round's fetch cache
+                # is released first (its consumers all ran last iteration),
+                # and this round's robots frame is built AFTER the fold.
+                self.release()
+                self._maybe_compact_metrics(spark)
+                # O(|metrics|) queue check — never a frontier scan.  A store
+                # written before lineage metrics existed has no chain yet:
+                # fall back to the exact count once (its first round commits
+                # metrics and every later check is chain-based).
+                try:
+                    queued = self.lineage_counts(spark).get("queued", 0)
+                except FileNotFoundError:
+                    queued = self.state_counts(spark).get("queued", 0)
+                if queued == 0:
+                    break
+                robots_rid = robots
+                if backoff_factor is not None and rid > 0:
+                    # adaptive politeness: scale delays by the failure rates
+                    # observed in earlier rounds (per-host metrics chain)
+                    robots_rid = P.apply_backoff(
+                        robots, self.host_stats(spark), factor=backoff_factor,
+                        broadcast=broadcast_robots,
+                    )
+                snap, fetched_pages = self.run_round(
+                    spark,
+                    pages,
+                    robots_rid,
+                    run_ts,
+                    round_id=rid,
+                    round_ms=round_ms,
+                    salt_buckets=salt_buckets,
+                    max_per_host=max_per_host,
+                    n_partitions=n_partitions,
+                    broadcast_robots=broadcast_robots,
+                )
+                n_fetched = fetched_pages.count()
+                if text_out and n_fetched:
+                    # crawl → extract in one loop (the reference's
+                    # crawl-then-process orchestration): per-round text
+                    # extraction appended to a parquet sink.  ZIP payloads
+                    # run the XBRL kernel; generic html gets stripped text.
+                    # meta-robots-noindex pages are crawled (their links
+                    # still feed discovery) but stay out of the content sink
+                    from . import extract as X
+
+                    sink_pages = fetched_pages
+                    if respect_nofollow:
+                        sink_pages = sink_pages.filter(
+                            ~meta_robots_flags(
+                                decode_permissive(F.col("html"))
+                            )["noindex"]
+                        )
+                    X.extract_text(
+                        sink_pages.select("url", "html")
+                        .withColumn("report_nm", F.lit(None).cast("string"))
+                        .withColumn("rcept_dt", F.lit(None).cast("string")),
+                        run_ts,
+                    ).write.mode("append").parquet(text_out)
+                n_ins = n_dup = 0
+                if discover and n_fetched:
+                    # carry the parent's priority through the explode (no
+                    # join-back); a link found under several parents takes
+                    # the BEST parent minus one decay step
+                    links = extract_links(
+                        fetched_pages.select(
+                            "url", "url_canon", "host", "priority", "html"
+                        ),
+                        carry=("priority",),
+                        respect_nofollow=respect_nofollow,
+                    )
+                    # sitemap/feed pages are discovery channels too: their
+                    # <loc>/<link> entries join the edge set with the SAME
+                    # priority inheritance, carried through the explode
+                    # like extract_links does (no join-back).  All three
+                    # extractors are codegen regexp walks over the one
+                    # fetched frame — a non-sitemap page simply yields no
+                    # blocks, so this adds no extra scan and no python.
+                    src_pages = fetched_pages.select("url", "priority", "html")
+                    absolute = F.col("link").rlike("^https?://")
+                    sm = (
+                        extract_sitemap_entries(src_pages, carry=("priority",))
+                        .select("src_url", F.col("loc").alias("link"), "priority")
+                        .filter(absolute)  # locs are absolute by spec
+                    )
+                    fd = (
+                        extract_feed_entries(src_pages, carry=("priority",))
+                        .select("src_url", "link", "priority")
+                        .filter(absolute)
+                    )
+                    links = links.select(
+                        "src_url", "link", "priority"
+                    ).unionByName(sm).unionByName(fd)
+                    if drop_traps:
+                        # map-side gate BEFORE the dedup shuffle: trapped
+                        # urls never cost a shuffle write or a seen-probe
+                        links = links.filter(~is_trap(F.col("link")))
+                    if drop_assets:
+                        links = links.filter(~is_static_asset(F.col("link")))
+                    discovered = (
+                        links.groupBy(F.col("link").alias("url"))
+                        .agg(
+                            (F.max("priority") - F.lit(priority_decay)).alias(
+                                "priority"
+                            )
+                        )
+                    )
+                    _, n_ins, n_dup = self.insert(
+                        spark, discovered, run_ts, depth=rid + 1
+                    )
+                summaries.append(
+                    {
+                        "round_id": rid,
+                        "snapshot": snap,
+                        "fetched": n_fetched,
+                        "discovered_new": n_ins,
+                        "discovered_dup": n_dup,
+                    }
+                )
+                if n_fetched == 0 and n_ins == 0:
+                    break  # starved round and nothing new → stop
         finally:
             self.release()
         return summaries
-
-    def _crawl_loop(
-        self, spark, pages, robots, run_ts, max_rounds, round_ms,
-        salt_buckets, max_per_host, n_partitions, discover, text_out,
-        backoff_factor, priority_decay, extract_links, summaries,
-        broadcast_robots=True, respect_nofollow=True, drop_traps=True,
-        drop_assets=True,
-    ) -> None:
-        for rid in range(max_rounds):
-            # compact the metrics chains BETWEEN rounds, never inside
-            # one: compaction rewrites the chains and GCs the old
-            # snapshot dirs, and a round's live frames (popped, fetched,
-            # the backoff-adjusted robots) all carry lazy lineage into
-            # those files — a lost cache block after an in-round
-            # compaction would recompute through deleted dirs and throw.
-            # Here nothing is live yet: the previous round's fetch cache
-            # is released first (its consumers all ran last iteration),
-            # and this round's robots frame is built AFTER the fold.
-            self.release()
-            self._maybe_compact_metrics(spark)
-            # O(|metrics|) queue check — never a frontier scan.  A store
-            # written before lineage metrics existed has no chain yet:
-            # fall back to the exact count once (its first round commits
-            # metrics and every later check is chain-based).
-            try:
-                queued = self.lineage_counts(spark).get("queued", 0)
-            except FileNotFoundError:
-                queued = self.state_counts(spark).get("queued", 0)
-            if queued == 0:
-                break
-            robots_rid = robots
-            if backoff_factor is not None and rid > 0:
-                # adaptive politeness: scale delays by the failure rates
-                # observed in earlier rounds (per-host metrics chain)
-                robots_rid = P.apply_backoff(
-                    robots, self.host_stats(spark), factor=backoff_factor,
-                    broadcast=broadcast_robots,
-                )
-            snap, fetched_pages = self.run_round(
-                spark,
-                pages,
-                robots_rid,
-                run_ts,
-                round_id=rid,
-                round_ms=round_ms,
-                salt_buckets=salt_buckets,
-                max_per_host=max_per_host,
-                n_partitions=n_partitions,
-                broadcast_robots=broadcast_robots,
-            )
-            n_fetched = fetched_pages.count()
-            if text_out and n_fetched:
-                # crawl → extract in one loop (the reference's
-                # crawl-then-process orchestration): per-round text
-                # extraction appended to a parquet sink.  ZIP payloads
-                # run the XBRL kernel; generic html gets stripped text.
-                # meta-robots-noindex pages are crawled (their links
-                # still feed discovery) but stay out of the content sink
-                from . import extract as X
-                from ..functions.links import (
-                    decode_permissive,
-                    meta_robots_flags,
-                )
-
-                sink_pages = fetched_pages
-                if respect_nofollow:
-                    sink_pages = sink_pages.filter(
-                        ~meta_robots_flags(
-                            decode_permissive(F.col("html"))
-                        )["noindex"]
-                    )
-                X.extract_text(
-                    sink_pages.select("url", "html")
-                    .withColumn("report_nm", F.lit(None).cast("string"))
-                    .withColumn("rcept_dt", F.lit(None).cast("string")),
-                    run_ts,
-                ).write.mode("append").parquet(text_out)
-            n_ins = n_dup = 0
-            if discover and n_fetched:
-                # carry the parent's priority through the explode (no
-                # join-back); a link found under several parents takes
-                # the BEST parent minus one decay step
-                links = extract_links(
-                    fetched_pages.select(
-                        "url", "url_canon", "host", "priority", "html"
-                    ),
-                    carry=("priority",),
-                    respect_nofollow=respect_nofollow,
-                )
-                # sitemap/feed pages are discovery channels too: their
-                # <loc>/<link> entries join the edge set with the SAME
-                # priority inheritance, carried through the explode
-                # like extract_links does (no join-back).  All three
-                # extractors are codegen regexp walks over the one
-                # fetched frame — a non-sitemap page simply yields no
-                # blocks, so this adds no extra scan and no python.
-                from ..functions.links import (
-                    extract_feed_entries,
-                    extract_sitemap_entries,
-                )
-
-                src_pages = fetched_pages.select("url", "priority", "html")
-                absolute = F.col("link").rlike("^https?://")
-                sm = (
-                    extract_sitemap_entries(src_pages, carry=("priority",))
-                    .select("src_url", F.col("loc").alias("link"), "priority")
-                    .filter(absolute)  # locs are absolute by spec
-                )
-                fd = (
-                    extract_feed_entries(src_pages, carry=("priority",))
-                    .select("src_url", "link", "priority")
-                    .filter(absolute)
-                )
-                links = links.select(
-                    "src_url", "link", "priority"
-                ).unionByName(sm).unionByName(fd)
-                if drop_traps:
-                    # map-side gate BEFORE the dedup shuffle: trapped
-                    # urls never cost a shuffle write or a seen-probe
-                    from ..functions.traps import is_trap
-
-                    links = links.filter(~is_trap(F.col("link")))
-                if drop_assets:
-                    from ..functions.traps import is_static_asset
-
-                    links = links.filter(~is_static_asset(F.col("link")))
-                discovered = (
-                    links.groupBy(F.col("link").alias("url"))
-                    .agg(
-                        (F.max("priority") - F.lit(priority_decay)).alias(
-                            "priority"
-                        )
-                    )
-                )
-                _, n_ins, n_dup = self.insert(
-                    spark, discovered, run_ts, depth=rid + 1
-                )
-            summaries.append(
-                {
-                    "round_id": rid,
-                    "snapshot": snap,
-                    "fetched": n_fetched,
-                    "discovered_new": n_ins,
-                    "discovered_dup": n_dup,
-                }
-            )
-            if n_fetched == 0 and n_ins == 0:
-                break  # starved round and nothing new → stop
 
     def state_counts(self, spark: SparkSession) -> dict[str, int]:
         """EXACT per-state counts — one full scan of the merged table.

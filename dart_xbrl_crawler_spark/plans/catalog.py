@@ -61,17 +61,9 @@ def query(name: str, sql: str | None):
     """,
 )
 def q01(spark, sf):
-    # lineitem ships as ONE parquet row group, so the scan cannot split
-    # and the (slow, exact) decimal partial aggregation would run in a
-    # single task whatever maxPartitionBytes says — spread it first.
-    # Exact decimal sums are partitioning-independent, and the shipdate
-    # filter still pushes to the scan through the repartition
-    # (plan-asserted in test_plan_quality).
-    par = spark.sparkContext.defaultParallelism
     li = _t(spark, sf, "lineitem")
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
-        .repartition(par)
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             _dsum(F.col("l_quantity")).alias("sum_qty"),
@@ -686,12 +678,7 @@ def q23(spark, sf):
     """,
 )
 def q44(spark, sf):
-    # Catalyst-split canonicalizer: the urls here are cheap to rescan
-    # (distinct over a generated projection), which is exactly the
-    # shape with_url_canon_split is for — the common-form rows never
-    # cross the python boundary (measured 5.7 s → 2.9 s first-run at
-    # 32 cores; value-identity pinned by the DuckDB parity gate)
-    from ..functions.urls import with_url_canon_split as with_url_canon
+    from ..functions.urls import with_url_canon
     from ..operators.politeness import ROBOTS_RULES_SCHEMA, apply_robots
 
     o = _t(spark, sf, "orders")

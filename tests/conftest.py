@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
@@ -7,6 +8,10 @@ import pytest
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+
+# the engine's 48g default JVM heap outgrows a small test host; an
+# explicit SPARK_DRIVER_MEM still wins
+os.environ.setdefault("SPARK_DRIVER_MEM", "6g")
 
 from dart_xbrl_crawler_spark.session import get_spark  # noqa: E402
 

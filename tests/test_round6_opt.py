@@ -1,9 +1,9 @@
 """Round-6 optimization-round regression tests: every optimization that
 changed an operator's internals gets an equivalence gate here.
 
-* with_url_canon_split (Catalyst fast path + UDF fallback) must produce
-  exactly with_url_canon's values on every input — eligible, ineligible
-  and adversarial spellings;
+* with_url_canon must produce exactly canonicalize_one's values on
+  adversarial spellings (line terminators, ipv6, whitespace, userinfo,
+  %-escapes) and keep NULL urls as rows;
 * pop_round's regime-prefilter restructure must keep the selected set
   and host_rank values identical to a straightforward recomputation;
 * the fast in-memory ZIP reader must defer every irregular archive to
@@ -17,12 +17,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from dart_xbrl_crawler_spark.functions.urls import (
-    _FAST_URL_RE,
-    canonicalize_one,
-    with_url_canon,
-    with_url_canon_split,
-)
+from dart_xbrl_crawler_spark.functions.urls import canonicalize_one, with_url_canon
 
 # Mixed corpus: bench-shaped, fixture trap spellings, general-path
 # oddities (userinfo, %-escapes, ipv6, whitespace, multi-'=', odd
@@ -59,7 +54,7 @@ ADVERSARIAL_URLS = [
     "https://h.example/p?~x=.&_y=-",
     "https://h.example/a//b///c",
     "https://h.example/p?k" + "&k=" ,  # duplicate key w/ and w/o '='
-    "https://h.example/p\n",  # Java's $ matches before a final \n
+    "https://h.example/p\n",  # trailing line terminators
     "https://h.example/p?a=1\r\n",
     "https://h.example\n",
     "https://h.example/p#frag\n",
@@ -67,85 +62,37 @@ ADVERSARIAL_URLS = [
 
 
 def test_split_matches_udf_on_adversarial(spark):
+    """with_url_canon equals canonicalize_one row by row, and keeps
+    every row."""
     df = spark.createDataFrame(
         pd.DataFrame({"url": ADVERSARIAL_URLS, "tag": range(len(ADVERSARIAL_URLS))}),
         schema="url string, tag long",
     )
-    got = {
-        r["tag"]: (r["url_canon"], r["host"], r["url_hash"])
-        for r in with_url_canon_split(df).collect()
-    }
-    assert len(got) == len(ADVERSARIAL_URLS)
+    rows = with_url_canon(df).collect()
+    assert len(rows) == len(ADVERSARIAL_URLS)
+    got = {r["tag"]: (r["url_canon"], r["host"]) for r in rows}
     for i, u in enumerate(ADVERSARIAL_URLS):
         c, h = canonicalize_one(u)
         assert got[i][0] == c, f"url_canon mismatch for {u!r}: {got[i][0]!r} != {c!r}"
         assert got[i][1] == h, f"host mismatch for {u!r}"
 
 
-def test_split_matches_udf_on_generated_corpus(spark):
-    """Bench-shaped + randomized generated corpus through both paths."""
-    n = 2000
-    base = spark.range(n)
-    url = F.concat(
-        F.lit("https://"),
-        F.when(F.col("id") % 10 < 6, F.lit("DART.FSS.OR.KR")).otherwise(
-            F.concat(F.lit("host"), (F.col("id") % 211).cast("string"), F.lit(".example"))
-        ),
-        F.lit("/api/doc?b="),
-        (F.col("id") % 7).cast("string"),
-        F.lit("&a="),
-        F.col("id").cast("string"),
-        F.when(F.col("id") % 3 == 0, "#frag").otherwise(""),
-    )
-    df = base.select(F.col("id").alias("tag"), url.alias("url"))
-    a = {
-        r["tag"]: (r["url_canon"], r["host"], r["url_hash"])
-        for r in with_url_canon_split(df).collect()
-    }
-    b = {
-        r["tag"]: (r["url_canon"], r["host"], r["url_hash"])
-        for r in with_url_canon(df).collect()
-    }
-    assert a == b
-
-
 def test_split_keeps_null_urls(spark):
-    """rlike(NULL) is NULL, so a NULL url matches neither side of the
-    split by itself: it must reach the UDF branch, not vanish."""
+    """A NULL url stays a row, with NULL url_canon and host — never
+    dropped."""
     urls = ["https://h.example/p", None, "https://user@h.example/q", None]
     df = spark.createDataFrame(
         pd.DataFrame({"url": urls, "tag": range(len(urls))}),
         schema="url string, tag long",
     )
-    split = with_url_canon_split(df)
-    assert split.count() == len(urls)
-    assert with_url_canon(df).count() == len(urls)
-    nulls = split.filter(F.col("url").isNull())
+    canon = with_url_canon(df)
+    assert canon.count() == len(urls)
+    nulls = canon.filter(F.col("url").isNull())
     assert nulls.count() == 2
-    assert nulls.filter(F.col("url_canon").isNotNull()).count() == 0
-
-
-def test_fast_regex_is_subset_of_python_fast_path():
-    """Every URL the Catalyst gate accepts must be one canonicalize_one
-    handles on its own fast path (no urllib fallback) — the Catalyst
-    expressions replicate exactly that branch.  (NB the spec is
-    canonicalize_one itself: its string-compare port check keeps
-    ':080' while urllib would drop it; the Catalyst path matches
-    canonicalize_one, as test_split_matches_udf_* pin value-level.)"""
-    import re
-    from unittest import mock
-
-    # Python spells Java's end-of-input \z as \Z
-    rx = re.compile(_FAST_URL_RE.replace(r"\z", r"\Z"))
-    from dart_xbrl_crawler_spark.functions import urls as U
-
-    for u in ADVERSARIAL_URLS:
-        if rx.match(u):
-            with mock.patch.object(
-                U, "_canonicalize_general",
-                side_effect=AssertionError(f"general path hit for {u!r}"),
-            ):
-                canonicalize_one(u)
+    assert (
+        nulls.filter(F.col("url_canon").isNotNull() | F.col("host").isNotNull()).count()
+        == 0
+    )
 
 
 @pytest.mark.parametrize("round_ms", [1_000, 10_000])
